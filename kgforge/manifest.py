@@ -75,12 +75,31 @@ class Manifest:
         return out
 
 
+def _parquet_footer(path: str) -> bytes:
+    """The footer of a Parquet file — its file metadata: row count,
+    schema, row-group statistics and column-chunk offsets — or ``b""``
+    if ``path`` is not a Parquet file. Reads the footer only, whatever
+    the data size."""
+    size = os.path.getsize(path)
+    if size < 12:
+        return b""
+    with open(path, "rb") as f:
+        f.seek(size - 8)
+        tail = f.read(8)
+        n = int.from_bytes(tail[:4], "little")
+        if tail[4:] != b"PAR1" or n > size - 12:
+            return b""
+        f.seek(size - 8 - n)
+        return f.read(n)
+
+
 def fingerprint_paths(*paths: str) -> str:
     """Cheap deterministic fingerprint of input locations: for files,
-    (name, size, mtime-free content hash of small files); for dirs, the
-    sorted (relpath, size) listing. Content hashing is avoided for big
-    data — size+name changes on any rewrite because part files are
-    re-randomized by Spark."""
+    name, size and the content of small files; for dirs, the sorted
+    (relpath, size) listing. Parquet files not hashed whole add their
+    footer, so a same-size rewrite with other rows, schema or values
+    still changes the fingerprint; the full content is never read for
+    big data."""
     h = hashlib.sha256()
     for path in paths:
         h.update(path.encode())
@@ -90,11 +109,14 @@ def fingerprint_paths(*paths: str) -> str:
                     fp = os.path.join(root, fn)
                     h.update(os.path.relpath(fp, path).encode())
                     h.update(str(os.path.getsize(fp)).encode())
+                    h.update(_parquet_footer(fp))
         elif os.path.isfile(path):
             h.update(str(os.path.getsize(path)).encode())
             if os.path.getsize(path) < 1 << 20:
                 with open(path, "rb") as f:
                     h.update(f.read())
+            else:
+                h.update(_parquet_footer(path))
     return h.hexdigest()[:16]
 
 

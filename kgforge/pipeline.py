@@ -1,7 +1,7 @@
 """Stage DAG + spark-submit entry (SURVEY.md §3.4).
 
-``transcripts → reassemble (B1) → extract (B2/B3) → dicts (B9) →
-link (B4–B6) → canonicalize (B7/B8) → materialize (B10) → evaluate (B12)``
+``transcripts → reassemble (B1) → extract (B2/B3) → canonicalize (B7/B8)
+→ dicts (B9) → link (B4–B6) → materialize (B10) → evaluate (B12)``
 
 Each stage is a pure DataFrame → DataFrame function wrapped with:
 read inputs → build plan → execute → write parquet + ``_SUCCESS`` →
@@ -9,6 +9,23 @@ manifest commit (B11). ``--resume`` skips stages whose manifest entry
 matches the current input fingerprint; changing any upstream output
 invalidates everything downstream automatically (the fingerprint of a
 stage includes its input stage's output listing).
+
+Job budget. At small and medium inputs the run is dominated by fixed
+per-job cost, not row work, so every stage aims at one Spark job per
+table it really reads or writes:
+
+* Dictionary-scale stages run on the driver below :data:`DRIVER_GATE`
+  names. ``canonicalize`` collects its name universe once and computes
+  alias pairs, anchoring, union-find components and the ``entities``
+  rollup in Python; ``dicts`` enumerates sorted distinct names as dense
+  ids. Above the gate the distributed chains run unchanged. Outputs are
+  identical either way.
+* A Parquet output written by this :class:`Pipeline` instance keeps its
+  schema, and later reads of it pass that schema: a schema-less
+  ``spark.read.parquet`` costs one inference job. External inputs, and
+  outputs of stages skipped on resume, are read with inference.
+* No stage sets a Spark job group or description: callers (the
+  benchmark's tracer, a scheduler) own those to attribute jobs.
 
 Launch: ``spark-submit --py-files kgforge.zip run_pipeline.py ...``.
 """
@@ -20,28 +37,47 @@ import os
 import time
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession
+import pandas as pd
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from . import fixtures, io_openke
 from .manifest import Manifest, fingerprint_config, fingerprint_paths
+from .session import tiny_df
+from .stages import canonicalize as canon
 from .stages import extract, link, materialize, reassemble
 
+#: a dictionary-scale table (alias universe, dictionary source) with at
+#: most this many rows is computed on the driver; above it the stage's
+#: distributed chain runs
+DRIVER_GATE = 10_000
 
-def _write(df: DataFrame, path: str, partitions: int | None = None) -> None:
-    w = df.repartition(partitions) if partitions else df
-    w.write.mode("overwrite").parquet(path)
+ALIAS_MAP_SCHEMA = StructType(
+    [StructField("surface", StringType()), StructField("canonical", StringType())]
+)
+ENTITIES_SCHEMA = StructType(
+    [
+        StructField("canonical", StringType()),
+        StructField("aliases", ArrayType(StringType(), False), False),
+    ]
+)
+DENSE_IDS_SCHEMA = StructType(
+    [StructField("name", StringType()), StructField("id", LongType(), False)]
+)
 
 
-def _write_counted(df: DataFrame, path: str, partitions: int | None = None) -> int:
-    """Write + row count in ONE job: the count rides the write via
-    ``df.observe`` instead of a count-after-write re-read — each re-read
-    was a whole extra (footer-only, but scheduled) job per stage."""
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    _write(df.observe(obs, F.count(F.lit(1)).alias("n")), path, partitions)
-    return int(obs.get["n"])
+def _nulls_first(x):
+    """Sort key matching Spark's ascending string order: nulls first,
+    then code-point order (equal to Spark's UTF-8 binary order)."""
+    return (x is not None, x or "")
 
 
 class Pipeline:
@@ -96,6 +132,8 @@ class Pipeline:
             }
         )
         self.timings: dict[str, float] = {}
+        #: output path -> schema of what this instance wrote there
+        self._schemas: dict[str, StructType] = {}
 
     # -- helpers ------------------------------------------------------------
 
@@ -114,6 +152,38 @@ class Pipeline:
         rows = extra.pop("row_count", None)
         self.manifest.commit(stage, fp, rows, wall, extra=extra or None)
 
+    def _write(
+        self, df: DataFrame, path: str, partitions: int | None = None, counted: bool = False
+    ) -> int | None:
+        """Write ``df`` to ``path`` and keep its schema for :meth:`_read`.
+        ``counted``: the row count rides the write via ``df.observe``
+        instead of a count-after-write re-read (a whole extra job)."""
+        obs = None
+        if counted:
+            obs = Observation()
+            df = df.observe(obs, F.count(F.lit(1)).alias("n"))
+        w = df.repartition(partitions) if partitions else df
+        w.write.mode("overwrite").parquet(path)
+        self._schemas[path] = df.schema
+        return int(obs.get["n"]) if obs else None
+
+    def _write_rows(self, rows: list, schema: StructType, path: str) -> int:
+        """Write driver-computed rows as one Parquet file; returns the
+        row count. ``schema`` carries the nullability the distributed
+        path would write (ids and collected alias arrays are non-null).
+        Object-dtype pandas, as in ``session.tiny_df``: the non-Arrow
+        path never sees numpy scalars."""
+        pdf = pd.DataFrame(rows, columns=schema.names, dtype=object)
+        self._write(self.spark.createDataFrame(pdf if rows else [], schema).coalesce(1), path)
+        return len(rows)
+
+    def _read(self, path: str) -> DataFrame:
+        """Read a stage output, with its schema if this instance wrote it
+        (no inference job)."""
+        schema = self._schemas.get(path)
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+        return reader.parquet(path)
+
     def _gaz(self):
         return self.spark.read.parquet(self.gazetteer_path)
 
@@ -124,7 +194,7 @@ class Pipeline:
         ordered = reassemble.ordered_turns(df)
         # write straight out of the window's shuffle partitioning — an
         # extra repartition() here would be a second full shuffle
-        n = _write_counted(ordered, self._out("reassemble"))
+        n = self._write(ordered, self._out("reassemble"), counted=True)
         return {"row_count": n}
 
     def stage_extract(self) -> dict:
@@ -133,35 +203,58 @@ class Pipeline:
         # 54s at local[8]/bench): the extra materialize+reread of ~7M
         # union rows costs more than the saved text scan — regex+Arrow
         # is cheaper than write bandwidth here. See docs/DESIGN_SCALE.md.
-        turns = self.spark.read.parquet(self._out("reassemble"))
+        turns = self._read(self._out("reassemble"))
         gaz_pdf = self._gaz().toPandas()
         pat_pdf = self.spark.read.parquet(self.patterns_path).toPandas()
         tri = extract.extract_triples(turns, gaz_pdf, pat_pdf)
         tri = extract.surface_triples_dedup(tri)
-        n = _write_counted(tri, os.path.join(self._out("extract"), "triples"))
+        n = self._write(tri, os.path.join(self._out("extract"), "triples"), counted=True)
         men = extract.detect_mentions(turns, gaz_pdf)
-        _write(men, os.path.join(self._out("extract"), "mentions"))
+        self._write(men, os.path.join(self._out("extract"), "mentions"))
         return {"row_count": n}
 
     def stage_canonicalize(self) -> dict:
-        """B7/B8 — alias canonicalization over *observed* surfaces.
+        """B7/B8 — alias canonicalization over *observed* surfaces: the
+        union of extracted subject/object surfaces and the gazetteer
+        aliases, mapped by :func:`canonicalize.alias_map` (MinHash-LSH
+        pairs, gazetteer-anchored connected components).
 
-        MinHash-LSH pairs + connected components over the union of
-        extracted subject/object surfaces and the gazetteer aliases.
-        Gazetteer canonicals act as anchors: candidate pairs that would
-        merge two *different* known canonicals are dropped (supervised
-        anchoring), every component maps to its (min) anchored canonical,
-        components with no anchor canonicalize to their min surface —
-        so unseen alias variants ride along with known groups.
+        The name universe is dictionary-scale (distinct surfaces, not the
+        corpus), so it is collected once — with each name's own
+        gazetteer canonical — and, at most :data:`DRIVER_GATE` names,
+        mapped on the driver; above the gate the distributed chain runs.
 
         Outputs: ``alias_map(surface, canonical)`` — the link stage's
         dictionary — and ``entities(canonical, aliases)``.
         """
-        from .stages import canonicalize as canon
-
-        tri = self.spark.read.parquet(os.path.join(self._out("extract"), "triples"))
+        tri = self._read(os.path.join(self._out("extract"), "triples"))
         gaz = self._gaz()
-        gazmap = gaz.select("surface", "canonical").dropDuplicates(["surface"])
+        am_path = os.path.join(self._out("canonicalize"), "alias_map")
+        ents_path = os.path.join(self._out("canonicalize"), "entities")
+        no_canon = F.lit(None).cast("string").alias("canonical")
+        # a surface listed twice in the gazetteer keeps one of its
+        # canonicals on either path (min here, first-seen distributed)
+        universe = (
+            tri.select(F.col("subj").alias("name"), no_canon)
+            .unionByName(tri.select(F.col("obj").alias("name"), no_canon))
+            .unionByName(gaz.select(F.col("surface").alias("name"), "canonical"))
+            .groupBy("name")
+            .agg(F.min("canonical").alias("canonical"))
+            .limit(DRIVER_GATE + 1)
+            .collect()
+        )
+        if len(universe) <= DRIVER_GATE:
+            universe = sorted(((r[0], r[1]) for r in universe), key=lambda r: _nulls_first(r[0]))
+            rows = canon.alias_map_driver(universe)
+            n = self._write_rows(rows, ALIAS_MAP_SCHEMA, am_path)
+            groups: dict = {}
+            for surface, canonical in rows:
+                aliases = groups.setdefault(canonical, set())
+                if surface is not None:
+                    aliases.add(surface)
+            ents = [(c, sorted(groups[c])) for c in sorted(groups, key=_nulls_first)]
+            self._write_rows(ents, ENTITIES_SCHEMA, ents_path)
+            return {"row_count": n}
         # pinned: referenced by the LSH chain AND the alias_map build —
         # each reference would otherwise re-read + re-distinct the triples
         names = (
@@ -171,70 +264,49 @@ class Pipeline:
             .distinct()
             .localCheckpoint(eager=False)
         )
-        # driver_threshold: like the CC fast path below, the alias
-        # universe is dictionary-scale, so the LSH chain's ~10 small
-        # jobs collapse into one driver pass under the gate (identical
-        # output; above the gate the distributed chain runs unchanged)
-        pairs = canon.alias_pairs(names, threshold=0.5, driver_threshold=10_000)
-        a_can = gazmap.select(F.col("surface").alias("a"), F.col("canonical").alias("_ca"))
-        b_can = gazmap.select(F.col("surface").alias("b"), F.col("canonical").alias("_cb"))
-        anchored = (
-            pairs.join(F.broadcast(a_can), "a", "left")
-            .join(F.broadcast(b_can), "b", "left")
-            .where(
-                F.col("_ca").isNull() | F.col("_cb").isNull() | (F.col("_ca") == F.col("_cb"))
-            )
-            .select("a", "b")
-        )
-        # driver_threshold: the alias graph is DICTIONARY-scale (bounded
-        # by distinct surfaces, not the corpus), so its CC wall is
-        # per-round job overhead — the union-find fast path collapses
-        # ~8 scheduling rounds into one job below the gate; above it the
-        # distributed loop runs unchanged (see connected_components)
-        cc = canon.connected_components(anchored, driver_threshold=100_000)
-        # component -> min known canonical (if any anchor in component)
-        comp_canon = (
-            cc.join(gazmap.withColumnRenamed("surface", "node"), "node", "left")
-            .groupBy("component")
-            .agg(F.min("canonical").alias("anchor_canonical"))
-        )
-        alias_map = (
-            names.join(cc.withColumnRenamed("node", "name"), "name", "left")
-            .withColumn("component", F.coalesce("component", "name"))
-            .join(F.broadcast(comp_canon), "component", "left")
-            # fallback chain: anchored canonical > own gazetteer canonical > min surface in component
-            .join(F.broadcast(gazmap.withColumnRenamed("surface", "name").withColumnRenamed("canonical", "_own")), "name", "left")
-            .withColumn("canonical", F.coalesce("anchor_canonical", "_own", "component"))
-            .select(F.col("name").alias("surface"), "canonical")
-        )
-        n = _write_counted(alias_map, os.path.join(self._out("canonicalize"), "alias_map"), 1)
+        gazmap = gaz.select("surface", "canonical").dropDuplicates(["surface"])
+        n = self._write(canon.alias_map(names, gazmap), am_path, 1, counted=True)
         # the entities rollup reads the written parquet back rather than
         # re-executing the alias_map join plan
         ents = (
-            self._alias_map().groupBy("canonical")
+            self._read(am_path).groupBy("canonical")
             .agg(F.sort_array(F.collect_set("surface")).alias("aliases"))
         )
-        _write(ents, os.path.join(self._out("canonicalize"), "entities"), 1)
+        self._write(ents, ents_path, 1)
         return {"row_count": n}
 
     def _alias_map(self):
-        return self.spark.read.parquet(os.path.join(self._out("canonicalize"), "alias_map"))
+        return self._read(os.path.join(self._out("canonicalize"), "alias_map"))
 
-    def stage_dicts(self) -> dict:
-        # dense_ids_impl="two_phase" is the 100x path (range-bucket +
-        # prefix-sum offsets, no single-partition global sort) — output
-        # is identical (tests assert equality), so it is NOT part of the
-        # config fingerprint: switching it never invalidates a resume.
-        pats = self.spark.read.parquet(self.patterns_path)
+    def _write_dense_ids(self, df: DataFrame, col: str, path: str) -> int:
+        """Dense ids ``0..N-1`` over the distinct ``col`` values in name
+        order, written to ``path`` as ``(name, id)``; returns N.
+
+        A source of at most :data:`DRIVER_GATE` rows is enumerated on the
+        driver. Above the gate ``dense_ids_impl`` runs:
+        ``"two_phase"`` is the 100x path (range-bucket + prefix-sum
+        offsets, no single-partition global sort). All three give
+        identical output (tests assert equality), so the choice is NOT
+        part of the config fingerprint: switching it never invalidates a
+        resume.
+        """
+        head = df.select(col).limit(DRIVER_GATE + 1).collect()
+        if len(head) <= DRIVER_GATE:
+            names = sorted({r[0] for r in head}, key=_nulls_first)
+            return self._write_rows(list(zip(names, range(len(names)))), DENSE_IDS_SCHEMA, path)
         did = (
             materialize.two_phase_dense_ids
             if self.dense_ids_impl == "two_phase"
             else materialize.dense_ids
         )
-        e2id = did(self._alias_map().select(F.col("canonical").alias("name")))
-        r2id = did(pats.select(F.col("pred").alias("name")))
-        _write(e2id, os.path.join(self._out("dicts"), "entity2id"), 1)
-        _write(r2id, os.path.join(self._out("dicts"), "relation2id"), 1)
+        return self._write(did(df.select(F.col(col).alias("name"))), path, 1, counted=True)
+
+    def stage_dicts(self) -> dict:
+        d = self._out("dicts")
+        n_ent = self._write_dense_ids(self._alias_map(), "canonical", os.path.join(d, "entity2id"))
+        n_rel = self._write_dense_ids(
+            self.spark.read.parquet(self.patterns_path), "pred", os.path.join(d, "relation2id")
+        )
         # A20: the model parameters the link/eval stages score with live
         # in a Parquet (id, vec) checkpoint. A trained checkpoint
         # (training.train* → io_openke.write_embeddings_parquet) plugs in
@@ -242,9 +314,8 @@ class Pipeline:
         # to the dictionaries are generated once and checkpointed here —
         # either way downstream stages READ the same format.
         if self.embeddings_path is None:
-            e2, r2 = self._dicts()
             emb = fixtures.gen_embeddings(
-                n_ent=e2.count(), n_rel=r2.count(), dim=16, seed=self.embeddings_seed
+                n_ent=n_ent, n_rel=n_rel, dim=16, seed=self.embeddings_seed
             )
             io_openke.write_embeddings_parquet(self.spark, emb, self._emb_dir())
         return {}
@@ -252,8 +323,8 @@ class Pipeline:
     def _dicts(self):
         d = self._out("dicts")
         return (
-            self.spark.read.parquet(os.path.join(d, "entity2id")),
-            self.spark.read.parquet(os.path.join(d, "relation2id")),
+            self._read(os.path.join(d, "entity2id")),
+            self._read(os.path.join(d, "relation2id")),
         )
 
     def _emb_dir(self) -> str:
@@ -267,7 +338,7 @@ class Pipeline:
         return io_openke.read_embeddings_parquet(self.spark, self._emb_dir())
 
     def stage_link(self) -> dict:
-        tri = self.spark.read.parquet(os.path.join(self._out("extract"), "triples"))
+        tri = self._read(os.path.join(self._out("extract"), "triples"))
         e2id, r2id = self._dicts()
         emb = self._embeddings()
         # the alias dictionary is the canonicalize stage's CC output —
@@ -275,18 +346,18 @@ class Pipeline:
         linked = link.link_triples(
             self.spark, tri, self._alias_map(), e2id, r2id, emb, self.model, self.norm
         )
-        _write(linked, self._out("link"))
+        self._write(linked, self._out("link"))
         return {}
 
     def stage_materialize(self) -> dict:
-        linked = self.spark.read.parquet(self._out("link"))
+        linked = self._read(self._out("link"))
         out = os.path.join(self._out("materialize"), "triples")
+        spo = linked.select("s", "p", "o").dropDuplicates(["s", "p", "o"])
         lineage = materialize.salted_write(
-            linked.select("s", "p", "o").dropDuplicates(["s", "p", "o"]),
-            out,
-            n_partitions=self.out_partitions,
-            salt_cols=("s",),
+            spo, out, n_partitions=self.out_partitions, salt_cols=("s",),
         )
+        # salted_write adds the int `part` column as hive partition dirs
+        self._schemas[out] = StructType(spo.schema.fields + [StructField("part", IntegerType())])
         # OpenKE-format export (A20 interchange). Dictionaries are
         # dictionary-sized (driver pandas is fine); the triple file is
         # data-sized and is written distributed + stream-concatenated.
@@ -296,7 +367,7 @@ class Pipeline:
         io_openke.write_dict_txt(e2id.toPandas(), os.path.join(exp, "entity2id.txt"))
         io_openke.write_dict_txt(r2id.toPandas(), os.path.join(exp, "relation2id.txt"))
         io_openke.write_triples_txt_spark(
-            self.spark.read.parquet(out).selectExpr("s as h", "o as t", "p as r"),
+            self._read(out).selectExpr("s as h", "o as t", "p as r"),
             os.path.join(exp, "train2id.txt"),
             n_partitions=self.out_partitions,
         )
@@ -310,7 +381,7 @@ class Pipeline:
             from .joins import write_bucketed
 
             write_bucketed(
-                self.spark.read.parquet(out).select("s", "p", "o"),
+                self._read(out).select("s", "p", "o"),
                 self.bucket_table,
                 key="s",
                 buckets=self.out_partitions,
@@ -324,7 +395,7 @@ class Pipeline:
         if self.export_ntriples:
             from .io_rdf import write_ntriples
 
-            ids = self.spark.read.parquet(out).select("s", "p", "o")
+            ids = self._read(out).select("s", "p", "o")
             e_s = e2id.select(F.col("id").alias("s"), F.col("name").alias("_s"))
             e_o = e2id.select(F.col("id").alias("o"), F.col("name").alias("_o"))
             r_p = r2id.select(F.col("id").alias("p"), F.col("name").alias("_p"))
@@ -361,19 +432,23 @@ class Pipeline:
         """
         from . import evaluate as ev
 
-        tri = self.spark.read.parquet(
+        tri = self._read(
             os.path.join(self._out("materialize"), "triples")
         ).selectExpr("s as h", "o as t", "p as r")
         bucket = F.pmod(F.xxhash64("h", "t", "r"), F.lit(10))
-        test = tri.where(bucket == F.lit(9)).orderBy("h", "t", "r").limit(500)
-        if test.isEmpty():  # tiny KGs: gate on everything
-            test = tri.orderBy("h", "t", "r").limit(500)
+        # the sample is collected once: as a lazy plan, the scoring below
+        # would re-run its filter + sort + limit over the KG per reference
+        sample = tri.where(bucket == F.lit(9)).orderBy("h", "t", "r").limit(500).collect()
+        if not sample:  # tiny KGs: gate on everything
+            sample = tri.orderBy("h", "t", "r").limit(500).collect()
+        # one partition, in sample order, as the ordered limit delivered it
+        test = tiny_df(self.spark, [tuple(r) for r in sample], "h long, t long, r long").coalesce(1)
         emb = self._embeddings()
         ranks = ev.link_prediction_ranks_relfilter(
             self.spark, test, emb, tri, model=self.model, norm=self.norm
-        ).localCheckpoint()  # ≤500 rows; one execution feeds metrics + count
+        )
         metrics = ev.link_prediction_metrics(ranks).toPandas().iloc[0].to_dict()
-        metrics["n_gate_triples"] = int(ranks.count())
+        metrics["n_gate_triples"] = len(sample)
         with open(os.path.join(self.work, "eval_metrics.json"), "w") as f:
             json.dump({k: float(v) for k, v in metrics.items()}, f, indent=1, sort_keys=True)
         return {"hits10_filt": float(metrics["hits10_filt"]), "mrr_filt": float(metrics["mrr_filt"])}

@@ -284,32 +284,8 @@ def alias_pairs(
     n_bands: int = 8,
     threshold: float = 0.5,
     max_bucket: int = 50,
-    driver_threshold: int = 0,
 ) -> DataFrame:
-    """Full B7: names → verified near-duplicate alias pairs (a, b, jaccard).
-
-    ``driver_threshold`` > 0 enables the scale-ADAPTIVE fast path
-    (same contract as :func:`connected_components`'s): if there are at
-    most that many distinct names, the whole minhash→band→bucket→verify
-    chain runs on the driver in one pass — identical output (same
-    :func:`minhash_matrix` signatures, same band slicing, same
-    ``max_bucket`` cap, same exact-shingle-Jaccard verify) computed
-    without the ~10 small Spark jobs the distributed chain schedules.
-    The pipeline's alias universe is DICTIONARY-scale (distinct
-    surfaces + gazetteer, not the corpus), so nearly all of its B7 wall
-    was fixed job overhead. Default 0 keeps every other caller on the
-    distributed path.
-    """
-    if driver_threshold:
-        head = (
-            names.select(F.col(name_col).alias("name")).distinct()
-            .limit(driver_threshold + 1).toPandas()
-        )
-        if len(head) <= driver_threshold:
-            return _alias_pairs_driver(
-                head["name"].tolist(), names.sparkSession,
-                n_perm, n_bands, threshold, max_bucket,
-            )
+    """Full B7: names → verified near-duplicate alias pairs (a, b, jaccard)."""
     sigs = minhash_signatures(names, name_col, n_perm)
     cands = lsh_candidate_pairs(sigs, name_col, n_bands, max_bucket)
     return exact_jaccard_filter(cands, threshold)
@@ -317,28 +293,28 @@ def alias_pairs(
 
 def _alias_pairs_driver(
     name_list: list,
-    spark,
-    n_perm: int,
-    n_bands: int,
-    threshold: float,
-    max_bucket: int,
+    n_perm: int = 32,
+    n_bands: int = 8,
+    threshold: float = 0.5,
+    max_bucket: int = 50,
     k: int = 3,
     seed: int = 42,
-) -> DataFrame:
-    """Driver-side replica of the distributed B7 chain (see
-    :func:`alias_pairs` ``driver_threshold``). Bucket identity uses the
-    raw band-slice bytes (the JVM path hashes the slice with xxhash64 —
-    same row partition, hash collisions aside); the verify uses raw
-    string shingle sets (equal to the hashed-array Jaccard the JVM path
+) -> list[tuple[str, str, float]]:
+    """Driver-side replica of :func:`alias_pairs` for a dictionary-scale
+    name list: the same :func:`minhash_matrix` signatures, band slicing,
+    ``max_bucket`` cap and exact-shingle-Jaccard verify, as ``(a, b,
+    jaccard)`` rows with ``a < b``. Bucket identity uses the raw
+    band-slice bytes (the JVM path hashes the slice with xxhash64 — same
+    row partition, hash collisions aside); the verify uses raw string
+    shingle sets (equal to the hashed-array Jaccard the JVM path
     computes, FNV collisions aside)."""
     import re as _re
 
     from collections import defaultdict
 
-    out_schema = "a string, b string, jaccard double"
     names_sorted = [s for s in name_list if s is not None]
     if not names_sorted:
-        return spark.createDataFrame([], out_schema)
+        return []
     norm = [_re.sub(r"[^\w]", "", s.lower()) for s in names_sorted]
     sigs = minhash_matrix(norm, n_perm, k, seed)
     rpb = n_perm // n_bands
@@ -371,15 +347,13 @@ def _alias_pairs_driver(
         j = float(inter) / float(len(sa) + len(sb) - inter)
         if j >= threshold:
             rows.append((a, b, j))
-    from ..session import tiny_df
-
-    return tiny_df(spark, rows, out_schema)
+    return rows
 
 
-def _unionfind_components(pdf, spark) -> DataFrame:
-    """Driver-side union-find over a SMALL edge list (see
-    ``driver_threshold``): same (node, component=min member) contract as
-    the iterative-join paths, exact by construction."""
+def _unionfind_components(edges) -> dict:
+    """Driver-side union-find over a SMALL ``(a, b)`` edge iterable:
+    ``{node: component}`` with component = min member — the same labels
+    as :func:`connected_components`, exact by construction."""
     parent: dict = {}
 
     def find(x):
@@ -390,7 +364,7 @@ def _unionfind_components(pdf, spark) -> DataFrame:
             parent[x], x = root, parent[x]
         return root
 
-    for a, b in pdf.itertuples(index=False):
+    for a, b in edges:
         parent.setdefault(a, a)
         parent.setdefault(b, b)
         ra, rb = find(a), find(b)
@@ -401,20 +375,13 @@ def _unionfind_components(pdf, spark) -> DataFrame:
         r = find(node)
         if r not in comp_min or node < comp_min[r]:
             comp_min[r] = node
-    rows = [(node, comp_min[find(node)]) for node in sorted(parent)]
-    if not rows:
-        return spark.createDataFrame(rows, schema=["node", "component"])
-    # pandas/Arrow path: the plain-list createDataFrame parallelizes into
-    # defaultParallelism pickled slices (~4s per call at local[32])
-    pdf = pd.DataFrame(rows, columns=["node", "component"], dtype=object)
-    return spark.createDataFrame(pdf)
+    return {node: comp_min[find(node)] for node in parent}
 
 
 def connected_components(
     edges: DataFrame,
     max_iter: int = 25,
     stats: dict | None = None,
-    driver_threshold: int = 0,
 ) -> DataFrame:
     """B8: hash-min CC over ``(a, b)`` string/long edges.
 
@@ -423,19 +390,6 @@ def connected_components(
     ``localCheckpoint`` per round. ``stats`` (optional dict) receives
     ``{"rounds": n}`` on convergence — the bench/cc_scale.py evidence
     hook for the O(diameter)-vs-O(log n) round-count comparison.
-
-    ``driver_threshold`` > 0 enables the scale-ADAPTIVE fast path: if
-    the symmetrized edge list is at most that many rows, run union-find
-    on the driver instead of the iterative join (identical output —
-    component = min member — just computed in one job instead of one
-    Spark job per round). The pipeline's alias graph is DICTIONARY-
-    scale (bounded by the gazetteer, not the corpus), so its CC wall
-    was almost entirely per-round job-scheduling overhead — the same
-    fixed cost that depresses measured scaling efficiency at high
-    parallelism. Default 0 keeps every existing caller (tests, the B8
-    contract query, cc_scale) on the distributed path; the threshold
-    gate plus the dictionary-scale argument is what makes this
-    driver-side step legal under the no-data-sized-collect rule.
     """
     # localCheckpoint: sym is re-joined EVERY round — without it each
     # iteration re-executes the entire upstream edge plan (at the
@@ -448,13 +402,6 @@ def connected_components(
         .distinct()
         .localCheckpoint(eager=False)
     )
-    if driver_threshold:
-        head = sym.limit(driver_threshold + 1).toPandas()
-        if len(head) <= driver_threshold:
-            if stats is not None:
-                stats["rounds"] = 0
-                stats["mode"] = "driver-unionfind"
-            return _unionfind_components(head, edges.sparkSession)
     labels = (
         sym.select(F.col("x").alias("node"))
         .distinct()
@@ -597,3 +544,74 @@ def canonical_groups(names: DataFrame, name_col: str = "name", **lsh_kw) -> Data
         .join(cc.withColumnRenamed("node", "name"), "name", "left")
         .withColumn("component", F.coalesce("component", "name"))
     )
+
+
+def alias_map(names: DataFrame, gazmap: DataFrame, threshold: float = 0.5) -> DataFrame:
+    """B7+B8 with gazetteer anchoring: ``names(name)`` + ``gazmap(surface,
+    canonical)`` → ``alias_map(surface, canonical)``.
+
+    Gazetteer canonicals act as anchors: candidate pairs that would
+    merge two *different* known canonicals are dropped (supervised
+    anchoring), every component maps to its (min) anchored canonical,
+    then to the name's own gazetteer canonical, then to the component
+    (its min surface) — so unseen alias variants ride along with known
+    groups. :func:`alias_map_driver` is the same map computed on the
+    driver for a dictionary-scale name list.
+    """
+    pairs = alias_pairs(names, threshold=threshold)
+    a_can = gazmap.select(F.col("surface").alias("a"), F.col("canonical").alias("_ca"))
+    b_can = gazmap.select(F.col("surface").alias("b"), F.col("canonical").alias("_cb"))
+    anchored = (
+        pairs.join(F.broadcast(a_can), "a", "left")
+        .join(F.broadcast(b_can), "b", "left")
+        .where(
+            F.col("_ca").isNull() | F.col("_cb").isNull() | (F.col("_ca") == F.col("_cb"))
+        )
+        .select("a", "b")
+    )
+    cc = connected_components(anchored)
+    # component -> min known canonical (if any anchor in component)
+    comp_canon = (
+        cc.join(gazmap.withColumnRenamed("surface", "node"), "node", "left")
+        .groupBy("component")
+        .agg(F.min("canonical").alias("anchor_canonical"))
+    )
+    return (
+        names.join(cc.withColumnRenamed("node", "name"), "name", "left")
+        .withColumn("component", F.coalesce("component", "name"))
+        .join(F.broadcast(comp_canon), "component", "left")
+        # fallback chain: anchored canonical > own gazetteer canonical > min surface in component
+        .join(F.broadcast(gazmap.withColumnRenamed("surface", "name").withColumnRenamed("canonical", "_own")), "name", "left")
+        .withColumn("canonical", F.coalesce("anchor_canonical", "_own", "component"))
+        .select(F.col("name").alias("surface"), "canonical")
+    )
+
+
+def alias_map_driver(
+    universe: list[tuple[str | None, str | None]], threshold: float = 0.5
+) -> list[tuple[str | None, str | None]]:
+    """:func:`alias_map` on the driver for a dictionary-scale universe of
+    distinct ``(name, own gazetteer canonical or None)`` rows: alias
+    pairs by :func:`_alias_pairs_driver`, the same anchor filter,
+    union-find components and fallback chain. Returns ``(surface,
+    canonical)`` rows in universe order; identical to the distributed
+    map's rows (a null name never joins, so it maps to null)."""
+    own = {n: c for n, c in universe if n is not None and c is not None}
+    anchored = (
+        (a, b) for a, b, _ in _alias_pairs_driver([n for n, _ in universe], threshold=threshold)
+        if a not in own or b not in own or own[a] == own[b]
+    )
+    comp = _unionfind_components(anchored)
+    anchor: dict = {}
+    for node, c in comp.items():
+        can = own.get(node)
+        if can is not None and (c not in anchor or can < anchor[c]):
+            anchor[c] = can
+    rows = []
+    for name, _ in universe:
+        c = comp.get(name, name)
+        can = anchor.get(c)
+        if can is None:
+            can = own.get(name, c)
+        rows.append((name, can))
+    return rows

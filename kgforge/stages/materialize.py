@@ -29,7 +29,7 @@ def dense_ids(names: DataFrame, name_col: str = "name") -> DataFrame:
     window executes in one partition, even under a constant partition
     key (verified — both lit(1) and column-derived constants still
     warn), so it cannot be silenced without changing the plan."""
-    w = Window.orderBy(name_col)
+    w = Window.orderBy("name")
     return (
         names.select(F.col(name_col).alias("name"))
         .distinct()
@@ -121,8 +121,10 @@ def salted_write(
     columns>), 16)`` — a *content* hash, never ``rand()``: partition
     assignment is a pure function of the row, so two runs (or a resume)
     produce byte-identical partition layout regardless of input
-    partitioning. Lineage counters come from ``df.observe`` (no second
-    scan).
+    partitioning. Lineage counters — the row count, approximate distinct
+    keys and the per-partition row counts (one conditional sum per
+    ``part`` value, which lies in ``[0, n_partitions)``) — ride the
+    write job via ``df.observe``: no read-back of the written table.
 
     Returns the lineage row (dict) that the manifest records.
     """
@@ -141,6 +143,10 @@ def salted_write(
         obs,
         F.count(F.lit(1)).alias("row_count"),
         F.approx_count_distinct(salt_cols[0]).alias("approx_distinct_keys"),
+        *[
+            F.coalesce(F.sum((F.col("part") == i).cast("long")), F.lit(0)).alias(f"_part{i}")
+            for i in range(n_partitions)
+        ],
     )
     # hive-style `part=` directories (Iceberg-shaped salted partitions);
     # `repartition` on the salt first so each output dir is one file
@@ -148,23 +154,15 @@ def salted_write(
         "part"
     ).parquet(path)
     lineage = dict(obs.get)
-    # per-partition lineage rows: cheap metadata-sized readback
-    # aggregation — collected ONCE; the lineage parquet is written from
-    # the collected rows (the old collect-after-write re-executed the
-    # whole readback aggregation a second time)
-    spark = df.sparkSession
-    parts = (
-        spark.read.parquet(path)
-        .groupBy("part")
-        .agg(F.count(F.lit(1)).alias("rows"))
-        .orderBy("part")
-        .collect()
-    )
+    # per-partition lineage rows: only partitions that received rows, as
+    # a group-by over the written table would list them
+    parts = {i: int(lineage.pop(f"_part{i}")) for i in range(n_partitions)}
+    parts = {i: n for i, n in parts.items() if n}
     from ..session import tiny_df
 
     tiny_df(
-        spark, [(int(r["part"]), int(r["rows"])) for r in parts], "part int, rows bigint"
+        df.sparkSession, list(parts.items()), "part int, rows bigint"
     ).coalesce(1).write.mode("overwrite").parquet(path + "_lineage")
-    lineage["partitions"] = {int(r["part"]): int(r["rows"]) for r in parts}
-    lineage["max_partition_rows"] = max((int(r["rows"]) for r in parts), default=0)
+    lineage["partitions"] = parts
+    lineage["max_partition_rows"] = max(parts.values(), default=0)
     return lineage

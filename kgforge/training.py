@@ -66,7 +66,9 @@ def _corrupt(h, t, r, n_ent, seed, epoch, bern_p=None, known_keys=None, n_rel=0)
         h.astype(np.uint64) * np.uint64(0x100000001B3)
         ^ t.astype(np.uint64) * np.uint64(0x1000193)
         ^ r.astype(np.uint64) * np.uint64(0x9E3779B1)
-        ^ np.uint64(seed * 2654435761 + epoch * 0x5DEECE66D)
+        # masked to 64 bits (as sampling._mix_base): a large seed would
+        # otherwise overflow uint64; values below 2**64 are unchanged
+        ^ np.uint64((seed * 2654435761 + epoch * 0x5DEECE66D) & 0xFFFFFFFFFFFFFFFF)
     )
     cand = (splitmix64(base) % np.uint64(n_ent)).astype(np.int64)
     if bern_p is None:

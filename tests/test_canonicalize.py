@@ -315,61 +315,78 @@ def test_bucketed_join_has_no_exchange(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS bkt_b")
 
 
-def test_driver_unionfind_equals_distributed_cc(spark):
-    """The scale-adaptive union-find fast path must return EXACTLY the
-    distributed hash-min labels (component = min member), including on
-    string nodes, chains, and isolated pairs; above the threshold the
-    distributed path still runs."""
-    import pandas as pd
+def _alias_universe():
+    """Gazetteer surfaces with their canonicals, their unseen hyphen
+    variants (space -> hyphen, no gazetteer entry), an unanchored
+    near-duplicate group, a near-duplicate pair anchored to two
+    different canonicals (the anchor filter drops it) and the same
+    pair bridged by an unanchored variant (one component, two anchors):
+    every branch of the anchor filter and fallback chain."""
+    gaz = gazetteer()
+    rows = list(zip(gaz["surface"], gaz["canonical"]))
+    rows += [(s.replace(" ", "-"), None) for s in gaz["surface"] if " " in s]
+    rows += [("Zorblax Industries", None), ("Zorblax-Industries", None),
+             ("Zorblax Industriez", None), ("Quuxley", None),
+             ("Quorvan Labs", "Quorvan Labs"), ("Quorvan Lab", "Quorvan Biotech"),
+             ("Zentrix Labs", "Zentrix Labs"), ("Zentrix Lab", "Zentrix Biotech"),
+             ("Zentrix-Labs", None)]
+    return sorted(rows, key=lambda r: r[0])
 
-    from kgforge.stages.canonicalize import connected_components
 
-    edges = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "a": ["b", "c", "x", "m", "n", "q"],
-                "b": ["a", "b", "y", "n", "o", "q"],
-            }
-        )
+def _alias_maps(spark, universe):
+    """(driver alias map, distributed alias map) as row sets."""
+    from kgforge.stages.canonicalize import alias_map, alias_map_driver
+
+    names = spark.createDataFrame(pd.DataFrame({"name": [n for n, _ in universe]}))
+    gazmap = spark.createDataFrame(
+        pd.DataFrame([r for r in universe if r[1] is not None], columns=["surface", "canonical"])
     )
-    stats_fast, stats_dist = {}, {}
-    fast = {
-        (r["node"], r["component"])
-        for r in connected_components(
-            edges, stats=stats_fast, driver_threshold=1000
-        ).collect()
-    }
-    dist = {
-        (r["node"], r["component"])
-        for r in connected_components(edges, stats=stats_dist).collect()
-    }
-    assert fast == dist
-    assert stats_fast["mode"] == "driver-unionfind" and stats_fast["rounds"] == 0
-    assert stats_dist["rounds"] > 0
-    # threshold smaller than the edge list -> distributed path taken
-    stats_big = {}
-    big = {
-        (r["node"], r["component"])
-        for r in connected_components(
-            edges, stats=stats_big, driver_threshold=3
-        ).collect()
-    }
-    assert big == dist and "mode" not in stats_big
+    dist = {tuple(r) for r in alias_map(names, gazmap).collect()}
+    return set(alias_map_driver(universe)), dist
+
+
+def test_driver_unionfind_equals_distributed_cc(spark):
+    """The driver union-find must return EXACTLY the distributed hash-min
+    labels (component = min member), including on string nodes, chains
+    and isolated pairs — and the driver alias map built on it must equal
+    the distributed chain's alias map."""
+    from kgforge.stages.canonicalize import _unionfind_components
+
+    edges = [("b", "a"), ("c", "b"), ("x", "y"), ("m", "n"), ("n", "o"), ("q", "q")]
+    edf = spark.createDataFrame(pd.DataFrame(edges, columns=["a", "b"]))
+    stats = {}
+    dist = {(r["node"], r["component"]) for r in connected_components(edf, stats=stats).collect()}
+    assert set(_unionfind_components(edges).items()) == dist
+    assert stats["rounds"] > 0
+    drv, dist_map = _alias_maps(spark, _alias_universe())
+    assert drv == dist_map
+    # the hyphen variants join their anchored groups; the unanchored
+    # group maps to its min member
+    amap = dict(drv)
+    assert amap["Zorblax-Industries"] == amap["Zorblax Industriez"] == "Zorblax Industries"
+    assert (amap["Quorvan Labs"], amap["Quorvan Lab"]) == ("Quorvan Labs", "Quorvan Biotech")
+    # a component holding two anchors maps to the min anchored canonical
+    assert {amap[n] for n in ("Zentrix Labs", "Zentrix Lab", "Zentrix-Labs")} == {"Zentrix Biotech"}
+    assert sum(1 for n, _ in _alias_universe() if "-" in n and "-" not in amap[n]) > 10
 
 
 def test_driver_alias_pairs_equals_distributed(spark):
-    """The alias_pairs driver fast path (driver_threshold) must produce
-    exactly the distributed chain's verified pairs — same candidates
-    (band-slice buckets, max_bucket cap) and same jaccard doubles."""
+    """The driver alias pairs must be exactly the distributed chain's
+    verified pairs — same candidates (band-slice buckets, max_bucket cap)
+    and same jaccard doubles — and the gazetteer's driver alias map must
+    equal the distributed one."""
+    from kgforge.stages.canonicalize import _alias_pairs_driver
+
     gaz = gazetteer()
     names = spark.createDataFrame(gaz[["surface"]].rename(columns={"surface": "name"}))
     dist = alias_pairs(names, threshold=0.5).toPandas()
-    drv = alias_pairs(names, threshold=0.5, driver_threshold=10_000).toPandas()
+    drv = pd.DataFrame(
+        _alias_pairs_driver(gaz["surface"].tolist(), threshold=0.5), columns=["a", "b", "jaccard"]
+    )
     key = ["a", "b"]
     dist = dist.sort_values(key).reset_index(drop=True)
     drv = drv.sort_values(key).reset_index(drop=True)
+    assert len(drv) > 0
     pd.testing.assert_frame_equal(dist, drv, check_like=True)
-    # above the gate the distributed path must run unchanged
-    over = alias_pairs(names, threshold=0.5, driver_threshold=2).toPandas()
-    over = over.sort_values(key).reset_index(drop=True)
-    pd.testing.assert_frame_equal(dist, over, check_like=True)
+    drv_map, dist_map = _alias_maps(spark, list(zip(gaz["surface"], gaz["canonical"])))
+    assert drv_map == dist_map

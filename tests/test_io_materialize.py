@@ -60,6 +60,11 @@ def test_dense_ids_deterministic_and_dense(spark):
     got = dense_ids(names).toPandas().sort_values("id").reset_index(drop=True)
     assert list(got["name"]) == ["a", "b", "c"]
     assert list(got["id"]) == [0, 1, 2]
+    # any source column name: the output is still (name, id)
+    canon = names.withColumnRenamed("name", "canonical")
+    got = dense_ids(canon, name_col="canonical").toPandas().sort_values("id")
+    assert list(got["name"]) == ["a", "b", "c"]
+    assert list(got["id"]) == [0, 1, 2]
 
 
 def test_two_phase_dense_ids_equivalent(spark):
@@ -91,6 +96,7 @@ def test_to_id_triples_and_salted_write(spark, tmp_path):
     lineage = salted_write(triples, out, n_partitions=4, salt_cols=("s",))
     assert lineage["row_count"] == 2
     assert sum(lineage["partitions"].values()) == 2  # per-partition rows
+    assert 0 not in lineage["partitions"].values()  # only non-empty parts listed
     back = (
         spark.read.parquet(out)
         .select("s", "p", "o")
@@ -117,6 +123,12 @@ def test_salted_write_deterministic_layout(spark, tmp_path):
     lin1 = salted_write(df1, out1, n_partitions=8, salt_cols=("s",))
     lin2 = salted_write(df2, out2, n_partitions=8, salt_cols=("s",))
     assert lin1["partitions"] == lin2["partitions"]
+    # the in-write per-partition counts equal a read-back of the table
+    back = spark.read.parquet(out1).groupBy("part").count().toPandas()
+    assert lin1["partitions"] == dict(zip(back["part"].tolist(), back["count"].tolist()))
+    assert lin1["max_partition_rows"] == int(back["count"].max())
+    lin_rows = spark.read.parquet(out1 + "_lineage").toPandas()
+    assert list(map(tuple, lin_rows.itertuples(index=False))) == sorted(lin1["partitions"].items())
     a = spark.read.parquet(out1).toPandas().sort_values(["s", "p", "o"]).reset_index(drop=True)
     b = spark.read.parquet(out2).toPandas().sort_values(["s", "p", "o"]).reset_index(drop=True)
     pd.testing.assert_frame_equal(a[["s", "p", "o", "part"]], b[["s", "p", "o", "part"]])
@@ -135,6 +147,48 @@ def test_manifest_resume(tmp_path):
     assert not m.is_done("extract", fp + "x")
     m.invalidate("extract")
     assert not m.is_done("extract", fp)
+
+
+def test_same_size_parquet_rewrite_reruns_stage(spark, tmp_path):
+    """Resume must not skip a stage whose input was rewritten with other
+    values at the same byte size: Parquet inputs of 1 MiB and more (and
+    every file in a directory input) are fingerprinted by their footer,
+    not by name and size alone."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from kgforge.pipeline import Pipeline
+
+    def write(path, offset):
+        x = np.arange(200_000, dtype=np.int64) + offset
+        pq.write_table(
+            pa.table({"x": x}), path, compression="none", use_dictionary=False
+        )
+
+    big = str(tmp_path / "big.parquet")
+    d = tmp_path / "dir"
+    d.mkdir()
+    part = str(d / "part-0.parquet")
+    write(big, 0)
+    write(part, 0)
+    size = os.path.getsize(big)
+    assert size >= 1 << 20
+    pipe = Pipeline(
+        spark, input_path=big, work_dir=str(tmp_path / "work"),
+        gazetteer_path=big, patterns_path=big, resume=True,
+    )
+    runs = []
+    for inp in (big, str(d)):
+        pipe._run_stage("s_" + os.path.basename(inp), [inp], lambda: runs.append(inp))
+        pipe._run_stage("s_" + os.path.basename(inp), [inp], lambda: runs.append(inp))
+    assert runs == [big, str(d)]  # second call of each resumed
+    write(big, 1)
+    write(part, 1)
+    assert os.path.getsize(big) == size
+    for inp in (big, str(d)):
+        pipe._run_stage("s_" + os.path.basename(inp), [inp], lambda: runs.append(inp))
+    assert runs == [big, str(d), big, str(d)]
 
 
 def test_type_constraint_roundtrip(tmp_path):

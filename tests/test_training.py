@@ -307,6 +307,26 @@ def test_softplus_distmult_trainer():
         assert abs(num - analytic[i, k]) < 1e-7, (i, k, num, analytic[i, k])
 
 
+def test_train_distributed_large_seed(spark):
+    """Seeds from ~2.2e8 up used to overflow the corruption hash's uint64
+    conversion (``seed * 31 + shard`` per shard); the hash is now masked
+    to 64 bits. A small seed's corruptions and trained embeddings stay
+    bit-identical to the unmasked hash (digests pinned before the fix)."""
+    import hashlib
+
+    t = SPLIT["train2id"]
+    h, tt, r = (t[c].to_numpy(np.int64) for c in ("h", "t", "r"))
+    nh, nt = training._corrupt(h, tt, r, N_ENT, 7 * 31 + 1, 3)
+    assert hashlib.sha256(nh.tobytes() + nt.tobytes()).hexdigest()[:16] == "1446a3f7bfd3dc44"
+    df = spark.createDataFrame(t)
+    kw = dict(dim=8, rounds=2, epochs_per_round=2, lr=0.1, n_shards=2)
+    emb = training.train_distributed(spark, df, N_ENT, N_REL, seed=7, **kw)
+    digest = hashlib.sha256(emb["ent"].tobytes() + emb["rel"].tobytes()).hexdigest()[:16]
+    assert digest == "0220c892fb763c4f"
+    big = training.train_distributed(spark, df, N_ENT, N_REL, seed=1645682185, **kw)
+    assert np.isfinite(big["ent"]).all() and np.isfinite(big["rel"]).all()
+
+
 def test_train_distributed_softplus(spark):
     """Param averaging is loss-agnostic: the softplus/DistMult local
     trainer slots into the same shard → average rounds, the trained
