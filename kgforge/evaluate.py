@@ -78,12 +78,8 @@ def link_prediction_ranks(
     constraints: tuple[dict[int, np.ndarray], dict[int, np.ndarray]] | None = None,
     score_decimals: int | None = None,
 ) -> DataFrame:
-    """Per-test-triple raw+filtered head/tail ranks (RANKS_SCHEMA).
-
-    ``constraints``: optional ``(domains, ranges)`` maps ``r → entity
-    ids`` (``type_constrain.txt`` semantics): candidates outside the
-    relation's domain/range are skipped entirely — the reference's
-    type-constrained protocol (``base/Test.h``, recalled — SURVEY.md §0).
+    """Per-test-triple raw+filtered head/tail ranks (RANKS_SCHEMA) of one
+    kernel: the one-model case of :func:`link_prediction_ranks_multi`.
 
     ``score_decimals``: round scores before the strict-< comparison.
     Needed for cross-engine L2 parity: L1 scores of float32 embeddings
@@ -91,6 +87,37 @@ def link_prediction_ranks(
     16-term sum ≤30 — order-free), but L2 squares carry 52 bits, so the
     sum's last ulp depends on accumulation order and unrounded rank
     comparisons flip between engines on mathematical ties.
+    """
+    return link_prediction_ranks_multi(
+        spark, test, emb, known, [(model, score_decimals)], norm, constraints
+    ).drop("model")
+
+
+def link_prediction_ranks_multi(
+    spark: SparkSession,
+    test: DataFrame,
+    emb: dict[str, np.ndarray],
+    known: pd.DataFrame | None,
+    models: list[tuple[str, int | None]],
+    norm: int = 1,
+    constraints: tuple[dict[int, np.ndarray], dict[int, np.ndarray]] | None = None,
+) -> DataFrame:
+    """Model-tagged ranks for SEVERAL ``(kernel, score_decimals)`` pairs
+    in ONE pass — the leaderboard shape, and the only NumPy scoring loop
+    (:func:`link_prediction_ranks` is its one-model case). The test table
+    crosses the Arrow boundary once and one broadcast set serves every
+    kernel instead of one mapInPandas branch + 3 broadcasts per kernel
+    (the unioned 7-branch plan cost ~2.7 s of scheduling for ~0.4 s of
+    NumPy at fixture scale). Output: ``model`` + RANKS_SCHEMA.
+
+    ``constraints``: optional ``(domains, ranges)`` maps ``r → entity
+    ids`` (``type_constrain.txt`` semantics): candidates outside the
+    relation's domain/range are skipped entirely — the reference's
+    type-constrained protocol (``base/Test.h``, recalled — SURVEY.md §0).
+    A relation absent from a map, or a ``None`` map, stays
+    unconstrained; the true entity is always scored, and known
+    candidates are intersected with the candidate set before they are
+    filtered out.
     """
     n_ent = emb["ent"].shape[0]
     b_emb = spark.sparkContext.broadcast({k: v for k, v in emb.items()})
@@ -101,92 +128,20 @@ def link_prediction_ranks(
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         E = b_emb.value
         heads_of, tails_of = b_known.value
-        constr = b_constr.value
-        domains = constr[0] if constr else None
-        ranges = constr[1] if constr else None
+        domains, ranges = b_constr.value or (None, None)
         all_ents = np.arange(n_ent, dtype=np.int64)
 
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            out = {
-                "rank_head_raw": np.empty(len(pdf), dtype=np.int64),
-                "rank_head_filt": np.empty(len(pdf), dtype=np.int64),
-                "rank_tail_raw": np.empty(len(pdf), dtype=np.int64),
-                "rank_tail_filt": np.empty(len(pdf), dtype=np.int64),
-            }
-            h_arr = pdf["h"].to_numpy(np.int64)
-            t_arr = pdf["t"].to_numpy(np.int64)
-            r_arr = pdf["r"].to_numpy(np.int64)
-            for i in range(len(pdf)):  # per test triple; inner op is |E|-vectorized
-                h, t, r = int(h_arr[i]), int(t_arr[i]), int(r_arr[i])
-                r_ids = np.full(n_ent, r, dtype=np.int64)
-                # head pass: score (e, r, t) over the candidate set
-                cand_h = all_ents if domains is None else domains.get(r, all_ents)
-                s_head = kernels.score_batch(
-                    model, E, all_ents, r_ids, np.full(n_ent, t, dtype=np.int64), norm
-                )
-                if score_decimals is not None:
-                    s_head = np.round(s_head, score_decimals)
-                true_s = s_head[h]
-                s_cand = s_head if cand_h is all_ents else s_head[cand_h]
-                out["rank_head_raw"][i] = 1 + int((s_cand < true_s).sum())
-                kh = heads_of.get((r, t))
-                filt = int((s_cand < true_s).sum())
-                if kh is not None:
-                    kh_eff = kh if cand_h is all_ents else np.intersect1d(kh, cand_h)
-                    filt -= int((s_head[kh_eff[kh_eff != h]] < true_s).sum())
-                out["rank_head_filt"][i] = 1 + filt
-                # tail pass: score (h, r, e) over the candidate set
-                cand_t = all_ents if ranges is None else ranges.get(r, all_ents)
-                s_tail = kernels.score_batch(
-                    model, E, np.full(n_ent, h, dtype=np.int64), r_ids, all_ents, norm
-                )
-                if score_decimals is not None:
-                    s_tail = np.round(s_tail, score_decimals)
-                true_s = s_tail[t]
-                s_cand = s_tail if cand_t is all_ents else s_tail[cand_t]
-                out["rank_tail_raw"][i] = 1 + int((s_cand < true_s).sum())
-                kt = tails_of.get((r, h))
-                filt = int((s_cand < true_s).sum())
-                if kt is not None:
-                    kt_eff = kt if cand_t is all_ents else np.intersect1d(kt, cand_t)
-                    filt -= int((s_tail[kt_eff[kt_eff != t]] < true_s).sum())
-                out["rank_tail_filt"][i] = 1 + filt
-            res = pdf[["h", "t", "r"]].copy()
-            for k, v in out.items():
-                res[k] = v
-            yield res
-
-    return test.select("h", "t", "r").mapInPandas(fn, RANKS_SCHEMA)
-
-
-def link_prediction_ranks_multi(
-    spark: SparkSession,
-    test: DataFrame,
-    emb: dict[str, np.ndarray],
-    known: pd.DataFrame | None,
-    models: list[tuple[str, int | None]],
-    norm: int = 1,
-) -> DataFrame:
-    """Model-tagged ranks for SEVERAL kernels in ONE pass — the
-    leaderboard shape. Per (model, test triple) the ranks are computed
-    by exactly the :func:`link_prediction_ranks` recipe (same scoring,
-    same rounding, same filtered-rank arithmetic), but the test table
-    crosses the Arrow boundary once and one broadcast set serves every
-    kernel instead of one mapInPandas branch + 3 broadcasts per kernel
-    (the unioned 7-branch plan cost ~2.7 s of scheduling for ~0.4 s of
-    NumPy at fixture scale). Output: ``model`` + RANKS_SCHEMA.
-    """
-    n_ent = emb["ent"].shape[0]
-    b_emb = spark.sparkContext.broadcast({k: v for k, v in emb.items()})
-    b_known = spark.sparkContext.broadcast(_known_maps(known))
-    _PINNED.extend([b_emb, b_known])
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        E = b_emb.value
-        heads_of, tails_of = b_known.value
-        all_ents = np.arange(n_ent, dtype=np.int64)
+        def rank(s, true_e, cand, known_e):
+            """(raw, filtered) rank of ``s[true_e]`` among ``s[cand]``."""
+            true_s = s[true_e]
+            s_cand = s if cand is all_ents else s[cand]
+            raw = int((s_cand < true_s).sum())
+            filt = raw
+            if known_e is not None:
+                if cand is not all_ents:
+                    known_e = np.intersect1d(known_e, cand)
+                filt -= int((s[known_e[known_e != true_e]] < true_s).sum())
+            return 1 + raw, 1 + filt
 
         for pdf in batches:
             if pdf.empty:
@@ -196,42 +151,36 @@ def link_prediction_ranks_multi(
             r_arr = pdf["r"].to_numpy(np.int64)
             outs = []
             for model, score_decimals in models:
-                out = {
-                    "rank_head_raw": np.empty(len(pdf), dtype=np.int64),
-                    "rank_head_filt": np.empty(len(pdf), dtype=np.int64),
-                    "rank_tail_raw": np.empty(len(pdf), dtype=np.int64),
-                    "rank_tail_filt": np.empty(len(pdf), dtype=np.int64),
-                }
+                out = np.empty((4, len(pdf)), dtype=np.int64)
                 for i in range(len(pdf)):  # per test triple; |E|-vectorized inner
                     h, t, r = int(h_arr[i]), int(t_arr[i]), int(r_arr[i])
                     r_ids = np.full(n_ent, r, dtype=np.int64)
+                    # head pass: score (e, r, t) over the candidate set
                     s_head = kernels.score_batch(
                         model, E, all_ents, r_ids, np.full(n_ent, t, dtype=np.int64), norm
                     )
-                    if score_decimals is not None:
-                        s_head = np.round(s_head, score_decimals)
-                    true_s = s_head[h]
-                    out["rank_head_raw"][i] = 1 + int((s_head < true_s).sum())
-                    kh = heads_of.get((r, t))
-                    filt = int((s_head < true_s).sum())
-                    if kh is not None:
-                        filt -= int((s_head[kh[kh != h]] < true_s).sum())
-                    out["rank_head_filt"][i] = 1 + filt
+                    # tail pass: score (h, r, e) over the candidate set
                     s_tail = kernels.score_batch(
                         model, E, np.full(n_ent, h, dtype=np.int64), r_ids, all_ents, norm
                     )
                     if score_decimals is not None:
+                        s_head = np.round(s_head, score_decimals)
                         s_tail = np.round(s_tail, score_decimals)
-                    true_s = s_tail[t]
-                    out["rank_tail_raw"][i] = 1 + int((s_tail < true_s).sum())
-                    kt = tails_of.get((r, h))
-                    filt = int((s_tail < true_s).sum())
-                    if kt is not None:
-                        filt -= int((s_tail[kt[kt != t]] < true_s).sum())
-                    out["rank_tail_filt"][i] = 1 + filt
+                    out[0:2, i] = rank(
+                        s_head, h,
+                        all_ents if domains is None else domains.get(r, all_ents),
+                        heads_of.get((r, t)),
+                    )
+                    out[2:4, i] = rank(
+                        s_tail, t,
+                        all_ents if ranges is None else ranges.get(r, all_ents),
+                        tails_of.get((r, h)),
+                    )
                 res = pdf[["h", "t", "r"]].copy()
                 res.insert(0, "model", model)
-                for k, v in out.items():
+                for k, v in zip(
+                    ("rank_head_raw", "rank_head_filt", "rank_tail_raw", "rank_tail_filt"), out
+                ):
                     res[k] = v
                 outs.append(res)
             yield pd.concat(outs, ignore_index=True)

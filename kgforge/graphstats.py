@@ -10,7 +10,7 @@ partials). No driver materialization, no Python row work.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -399,32 +399,70 @@ def subject_out_degrees(triples: DataFrame, subj: str = "s") -> DataFrame:
     )
 
 
-def pagerank(
-    triples: DataFrame,
-    n_iter: int = 10,
-    damping: float = 0.85,
-    round_decimals: int = 9,
+def _distinct_edges(triples: DataFrame) -> DataFrame:
+    """Distinct ``h -> t`` edges ``(src, dst)``, self-loops dropped."""
+    return (
+        triples.select(F.col("h").alias("src"), F.col("t").alias("dst"))
+        .where(F.col("src") != F.col("dst"))
+        .dropDuplicates(["src", "dst"])
+    )
+
+
+def _pr_tables(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Loop-invariant tables of the PageRank family from ``(src, dst, w)``
+    edges, built once: the edges with the source's out-strength ``sw =
+    Σ_out w`` folded in (the loop never joins the |V|-sized out-strength
+    table), and the nodes ``(e, _dang)`` flagging out-degree-0 (dangling)
+    nodes, so each round's dangling mass rides that round's checkpoint
+    as an Observation. The caller adds the base column ``b``."""
+    edges = edges.localCheckpoint(eager=False)
+    sources = edges.select(F.col("src").alias("e"))
+    nodes = (
+        sources.unionByName(edges.select(F.col("dst").alias("e")))
+        .distinct()
+        .join(sources.distinct().withColumn("_o", F.lit(1)), "e", "left")
+        .select("e", F.col("_o").isNull().alias("_dang"))
+    )
+    outs = edges.groupBy("src").agg(F.sum("w").alias("sw"))
+    return edges.join(outs, "src").localCheckpoint(eager=False), nodes
+
+
+def _power_iteration(
+    edges: DataFrame,
+    nodes: DataFrame,
+    z: float,
+    n_iter: int,
+    damping: float,
+    round_decimals: int,
 ) -> DataFrame:
-    """Entity importance by damped PageRank over the directed entity
-    graph (distinct ``h -> t`` edges, self-loops dropped): ``(e, rank)``.
+    """The power iteration behind :func:`pagerank`,
+    :func:`personalized_pagerank` and :func:`pagerank_weighted`:
+    ``(e, rank)`` after ``n_iter`` rounds.
+
+    ``edges`` are ``(src, dst, w, sw)`` (edge weight, source
+    out-strength), ``nodes`` are ``(e, _dang, b)`` (dangling flag,
+    teleport base; see :func:`_pr_tables`), and ``z`` normalizes the
+    base. ``r0 = round(b/z)``; per iteration
+
+    * contribution: ``Σ rank·w/sw`` over in-edges — one join of the edge
+      table with the rank table on ``src`` plus one ``groupBy(dst)``
+      aggregation (map-side partial);
+    * dangling mass: the ranks of dangling nodes, redistributed along the
+      teleport distribution ``b/z`` (the standard stochastic-matrix fix);
+    * ``rank' = round((1-d)·b/z + d·(contrib + dang·b/z))``.
+
+    The variants pass literal 1.0 for ``w``, ``b`` or ``z`` where they
+    have none, and multiplying or dividing by 1.0 is exact, so each one
+    evaluates its own textbook expression bit for bit.
 
     Fixed-iteration power method (no convergence test — N is part of
-    the query contract so any engine replays it exactly). Per iteration:
-
-    * contribution: ``sum(rank/out_degree)`` over in-edges — one join of
-      the edge table with the rank table on ``src`` plus one ``groupBy
-      (dst)`` aggregation (map-side partial);
-    * dangling mass: ranks of out-degree-0 nodes, redistributed
-      uniformly (the standard stochastic-matrix fix) — a one-row
-      aggregate that rides broadcast;
-    * ``rank' = (1-d)/N + d * (contrib + dangling/N)``.
-
-    Every iteration's ranks are rounded to ``round_decimals`` — floating
-    sums are accumulation-order-dependent at the ulp, so without the
+    the query contract so any engine replays it exactly). Every
+    iteration's ranks are rounded to ``round_decimals`` — floating sums
+    are accumulation-order-dependent at the ulp, so without the
     per-iteration round two engines (or two partitionings) could drift
     apart across iterations; rounding at 1e-9 re-synchronizes each round
     (per-round error is ~1e-15, far inside the rounding step). This is
-    what makes the DuckDB unrolled-CTE oracle hash-exact, and makes the
+    what makes the DuckDB unrolled-CTE oracles hash-exact, and makes the
     result partitioning-independent — same determinism rule as the
     pipeline's content-hash salting.
 
@@ -438,79 +476,63 @@ def pagerank(
     otherwise grow linearly with iterations (same trap as B8's CC loop,
     canonicalize.py).
     """
-    from pyspark.sql import Observation
-
-    edges = (
-        triples.select(F.col("h").alias("src"), F.col("t").alias("dst"))
-        .where(F.col("src") != F.col("dst"))
-        .dropDuplicates(["src", "dst"])
-        .localCheckpoint(eager=False)
-    )
-    outdeg = edges.groupBy("src").agg(
-        F.count(F.lit(1)).cast("double").alias("od")
-    ).localCheckpoint(eager=False)
-    # out-degree is static: folded into the edge table ONCE, so the loop
-    # never joins (or worse, broadcasts) the |V|-sized outdeg table —
-    # per-iteration work is exactly edges⋈ranks + groupBy(dst)
-    edges_od = edges.join(outdeg, "src").localCheckpoint(eager=False)
-    # the dangling (out-degree-0) flag is static: folded into the node
-    # table once, so each round's dangling MASS is collected by an
-    # Observation riding the round's own checkpoint materialization —
-    # the old per-round semi-join + one-row agg + broadcast cost two
-    # extra jobs per iteration
-    nodes_d = (
-        edges.select(F.col("src").alias("e"))
-        .unionByName(edges.select(F.col("dst").alias("e")))
-        .distinct()
-        .join(outdeg.withColumnRenamed("src", "e"), "e", "left")
-        .select("e", F.col("od").isNull().alias("_dang"))
-        .localCheckpoint()
-    )
-    # max(1): an empty graph has no rank rows at all, so the value is
-    # never observed — the guard only avoids Python's 0-division
-    n_val = float(nodes_d.count()) or 1.0
-    _dang_sum = F.coalesce(
+    dang_sum = F.coalesce(
         F.sum(F.when(F.col("_dang"), F.col("rank"))), F.lit(0.0)
     ).alias("dang")
-    obs = Observation("pr_init")
+    d, zl = F.lit(damping), F.lit(z)
+    obs = Observation()
     ranks = (
-        nodes_d.select(
-            "e", "_dang", F.round(F.lit(1.0 / n_val), round_decimals).alias("rank")
-        )
-        .observe(obs, _dang_sum)
+        nodes.select("e", "_dang", F.round(F.col("b") / zl, round_decimals).alias("rank"))
+        .observe(obs, dang_sum)
         .localCheckpoint()
     )
-    d = F.lit(damping)
-    for it in range(n_iter):
-        dang_val = float(obs.get["dang"])
+    for _ in range(n_iter):
+        dang = F.lit(float(obs.get["dang"]))
         contrib = (
-            edges_od.join(
-                ranks.select(F.col("e").alias("src"), "rank"), "src"
-            )
+            edges.join(ranks.select(F.col("e").alias("src"), "rank"), "src")
             .groupBy("dst")
-            .agg(F.sum(F.col("rank") / F.col("od")).alias("contrib"))
+            .agg(F.sum(F.col("rank") * F.col("w") / F.col("sw")).alias("contrib"))
             .withColumnRenamed("dst", "e")
         )
-        obs = Observation(f"pr_round_{it}")
+        obs = Observation()
         ranks = (
-            nodes_d.join(contrib, "e", "left")
+            nodes.join(contrib, "e", "left")
             .select(
                 "e",
                 "_dang",
                 F.round(
-                    (F.lit(1.0) - d) / F.lit(n_val)
-                    + d
-                    * (
-                        F.coalesce("contrib", F.lit(0.0))
-                        + F.lit(dang_val) / F.lit(n_val)
-                    ),
+                    (F.lit(1.0) - d) * F.col("b") / zl
+                    + d * (F.coalesce("contrib", F.lit(0.0)) + dang * F.col("b") / zl),
                     round_decimals,
                 ).alias("rank"),
             )
-            .observe(obs, _dang_sum)
+            .observe(obs, dang_sum)
             .localCheckpoint()
         )
     return ranks.select("e", "rank")
+
+
+def pagerank(
+    triples: DataFrame,
+    n_iter: int = 10,
+    damping: float = 0.85,
+    round_decimals: int = 9,
+) -> DataFrame:
+    """Entity importance by damped PageRank over the directed entity
+    graph (distinct ``h -> t`` edges, self-loops dropped): ``(e, rank)``.
+
+    Rank spreads uniformly over out-edges and teleports (and dangling
+    mass redistributes) uniformly over all ``N`` nodes: ``r0 = 1/N``,
+    ``rank' = (1-d)/N + d·(Σ rank/out_degree + dangling/N)`` —
+    :func:`_power_iteration` with ``w = 1``, ``b = 1`` and ``z = N`` (see
+    it for the determinism and scale argument).
+    """
+    edges, nodes = _pr_tables(_distinct_edges(triples).withColumn("w", F.lit(1.0)))
+    nodes = nodes.withColumn("b", F.lit(1.0)).localCheckpoint()
+    # max(1): an empty graph has no rank rows at all, so the value is
+    # never observed — the guard only avoids Python's 0-division
+    n_val = float(nodes.count()) or 1.0
+    return _power_iteration(edges, nodes, n_val, n_iter, damping, round_decimals)
 
 
 def label_propagation(triples: DataFrame, n_iter: int = 5) -> DataFrame:
@@ -803,95 +825,36 @@ def personalized_pagerank(
     neighborhoods. The standard query behind "entities related to X"
     recommendation / KG-completion candidate generation.
 
-    Same fixed-iteration, per-round ``round(…, round_decimals)`` power
-    method as :func:`pagerank` (see its docstring for the determinism
-    and scale argument); differences: the base vector ``b`` is
-    ``1/|S|`` on seeds (seeds outside the graph are ignored) and ``0``
-    elsewhere, ``r0 = b``, the update is
+    The edge table is :func:`pagerank`'s; the base vector ``b`` is
+    ``1/|S|`` (rounded) on seeds (seeds outside the graph are ignored)
+    and ``0`` elsewhere, ``r0 = b``, and the update is
     ``r' = (1-d)·b + d·(contrib + dang·b)`` — dangling mass
-    redistributes along the TELEPORT distribution, not uniformly. The
-    loop-invariant tables (edge+outdeg fold, dangling set, base vector)
-    are built once and checkpointed, exactly as in :func:`pagerank`.
+    redistributes along the TELEPORT distribution, not uniformly:
+    :func:`_power_iteration` with ``w = 1`` and ``z = 1``.
     """
-    from pyspark.sql import Observation
-
-    edges = (
-        triples.select(F.col("h").alias("src"), F.col("t").alias("dst"))
-        .where(F.col("src") != F.col("dst"))
-        .dropDuplicates(["src", "dst"])
-        .localCheckpoint(eager=False)
-    )
-    nodes = (
-        edges.select(F.col("src").alias("e"))
-        .unionByName(edges.select(F.col("dst").alias("e")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    outdeg = edges.groupBy("src").agg(
-        F.count(F.lit(1)).cast("double").alias("od")
-    ).localCheckpoint(eager=False)
-    edges_od = edges.join(outdeg, "src").localCheckpoint(eager=False)
+    edges, nodes = _pr_tables(_distinct_edges(triples).withColumn("w", F.lit(1.0)))
     s = (
         seeds.select(F.col("seed").alias("e"))
         .dropDuplicates()
         .join(nodes, "e", "left_semi")
     )
     ns = s.agg(F.count(F.lit(1)).cast("double").alias("ns"))
-    # the dangling flag and teleport base are both static: folded into
-    # one node table, so each round's dangling mass rides the round's
-    # checkpoint as an Observation instead of a semi-join + one-row agg
-    # + broadcast (two extra jobs per iteration — same shape as pagerank)
-    base = (
+    nodes = (
         nodes.join(s.withColumn("_s", F.lit(1)), "e", "left")
-        .join(outdeg.withColumnRenamed("src", "e").withColumn("_o", F.lit(1)).select("e", "_o"), "e", "left")
         .crossJoin(F.broadcast(ns))
         .select(
             "e",
+            "_dang",
             F.round(
                 F.when(F.col("_s").isNotNull(), F.lit(1.0) / F.col("ns")).otherwise(
                     F.lit(0.0)
                 ),
                 round_decimals,
             ).alias("b"),
-            F.col("_o").isNull().alias("_dang"),
         )
         .localCheckpoint()
     )
-    _dang_sum = F.coalesce(
-        F.sum(F.when(F.col("_dang"), F.col("rank"))), F.lit(0.0)
-    ).alias("dang")
-    obs = Observation("ppr_init")
-    ranks = (
-        base.select("e", "_dang", F.col("b").alias("rank"))
-        .observe(obs, _dang_sum)
-        .localCheckpoint()
-    )
-    d = F.lit(damping)
-    for it in range(n_iter):
-        dang_val = float(obs.get["dang"])
-        contrib = (
-            edges_od.join(ranks.select(F.col("e").alias("src"), "rank"), "src")
-            .groupBy("dst")
-            .agg(F.sum(F.col("rank") / F.col("od")).alias("contrib"))
-            .withColumnRenamed("dst", "e")
-        )
-        obs = Observation(f"ppr_round_{it}")
-        ranks = (
-            base.join(contrib, "e", "left")
-            .select(
-                "e",
-                "_dang",
-                F.round(
-                    (F.lit(1.0) - d) * F.col("b")
-                    + d
-                    * (F.coalesce("contrib", F.lit(0.0)) + F.lit(dang_val) * F.col("b")),
-                    round_decimals,
-                ).alias("rank"),
-            )
-            .observe(obs, _dang_sum)
-            .localCheckpoint()
-        )
-    return ranks.select("e", "rank")
+    return _power_iteration(edges, nodes, 1.0, n_iter, damping, round_decimals)
 
 
 def top_hubs(triples: DataFrame, k: int = 10) -> DataFrame:
@@ -940,12 +903,7 @@ def hits(
     Sink-only nodes keep hub 0, source-only nodes auth 0 — they stay in
     the output via the left join against the node table.
     """
-    edges = (
-        triples.select(F.col("h").alias("src"), F.col("t").alias("dst"))
-        .where(F.col("src") != F.col("dst"))
-        .dropDuplicates(["src", "dst"])
-        .localCheckpoint()
-    )
+    edges = _distinct_edges(triples).localCheckpoint()
     nodes = (
         edges.select(F.col("src").alias("e"))
         .unionByName(edges.select(F.col("dst").alias("e")))
@@ -1273,76 +1231,17 @@ def pagerank_weighted(
     ships five times the endorsement of a single-relation pair, which
     plain :func:`pagerank` (distinct-edge, weight-blind) erases.
 
-    Same fixed-iteration, per-round ``round(…, round_decimals)``
-    contract and localCheckpoint discipline as :func:`pagerank` (see
-    its docstring for the determinism and scale arguments); the only
-    structural change is the weighted edge table folding its
-    out-strength once, loop-invariant."""
-    from pyspark.sql import Observation
-
-    edges = (
+    Teleport and dangling mass are :func:`pagerank`'s (uniform over all
+    ``N`` nodes): :func:`_power_iteration` with ``b = 1`` and ``z = N``.
+    """
+    edges, nodes = _pr_tables(
         triples.where(F.col("h") != F.col("t"))
         .groupBy(F.col("h").alias("src"), F.col("t").alias("dst"))
         .agg(F.count_distinct("r").cast("double").alias("w"))
-        .localCheckpoint(eager=False)
     )
-    outs = edges.groupBy("src").agg(F.sum("w").alias("sw"))
-    edges_w = edges.join(outs, "src").localCheckpoint(eager=False)
-    # dangling flag folded into the node table; per-round dangling mass
-    # rides each round's checkpoint as an Observation (see pagerank)
-    nodes_d = (
-        edges.select(F.col("src").alias("e"))
-        .unionByName(edges.select(F.col("dst").alias("e")))
-        .distinct()
-        .join(
-            edges.select(F.col("src").alias("e")).distinct().withColumn("_o", F.lit(1)),
-            "e",
-            "left",
-        )
-        .select("e", F.col("_o").isNull().alias("_dang"))
-        .localCheckpoint()
-    )
-    n_val = float(nodes_d.count()) or 1.0
-    _dang_sum = F.coalesce(
-        F.sum(F.when(F.col("_dang"), F.col("rank"))), F.lit(0.0)
-    ).alias("dang")
-    obs = Observation("wpr_init")
-    ranks = (
-        nodes_d.select(
-            "e", "_dang", F.round(F.lit(1.0 / n_val), round_decimals).alias("rank")
-        )
-        .observe(obs, _dang_sum)
-        .localCheckpoint()
-    )
-    d = F.lit(damping)
-    for it in range(n_iter):
-        dang_val = float(obs.get["dang"])
-        contrib = (
-            edges_w.join(ranks.select(F.col("e").alias("src"), "rank"), "src")
-            .groupBy("dst")
-            .agg(F.sum(F.col("rank") * F.col("w") / F.col("sw")).alias("contrib"))
-            .withColumnRenamed("dst", "e")
-        )
-        obs = Observation(f"wpr_round_{it}")
-        ranks = (
-            nodes_d.join(contrib, "e", "left")
-            .select(
-                "e",
-                "_dang",
-                F.round(
-                    (F.lit(1.0) - d) / F.lit(n_val)
-                    + d
-                    * (
-                        F.coalesce("contrib", F.lit(0.0))
-                        + F.lit(dang_val) / F.lit(n_val)
-                    ),
-                    round_decimals,
-                ).alias("rank"),
-            )
-            .observe(obs, _dang_sum)
-            .localCheckpoint()
-        )
-    return ranks.select("e", "rank")
+    nodes = nodes.withColumn("b", F.lit(1.0)).localCheckpoint()
+    n_val = float(nodes.count()) or 1.0
+    return _power_iteration(edges, nodes, n_val, n_iter, damping, round_decimals)
 
 
 def shortest_paths(

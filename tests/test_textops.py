@@ -417,19 +417,27 @@ def test_pagerank_matches_numpy_power_iteration(spark):
     assert abs(sum(got.values()) - 1.0) < 1e-6  # probability mass conserved
 
 
-def test_pagerank_partitioning_independent(spark):
+@pytest.mark.parametrize("variant", ["pagerank", "personalized_pagerank", "pagerank_weighted"])
+def test_pagerank_partitioning_independent(spark, variant):
     import numpy as np
 
-    from kgforge.graphstats import pagerank
+    from kgforge import graphstats
 
     rng = np.random.default_rng(43)
     tri = pd.DataFrame(
-        {"h": rng.integers(0, 20, 80), "t": rng.integers(0, 20, 80), "r": 0}
+        {"h": rng.integers(0, 20, 80), "t": rng.integers(0, 20, 80), "r": rng.integers(0, 3, 80)}
     )
+    seeds = spark.createDataFrame([(0,), (7,)], "seed long")
+
+    def ranks(df):
+        if variant == "personalized_pagerank":
+            out = graphstats.personalized_pagerank(df, seeds, n_iter=6)
+        else:
+            out = getattr(graphstats, variant)(df, n_iter=6)
+        return out.toPandas().set_index("e")["rank"].to_dict()
+
     df = spark.createDataFrame(tri)
-    a = pagerank(df, n_iter=6).toPandas().set_index("e")["rank"].to_dict()
-    b = pagerank(df.repartition(13), n_iter=6).toPandas().set_index("e")["rank"].to_dict()
-    assert a == b
+    assert ranks(df) == ranks(df.repartition(13))
 
 
 def test_round4_ops_handle_empty_inputs(spark):
@@ -470,12 +478,13 @@ def test_round4_ops_handle_empty_inputs(spark):
 def test_round5_ops_handle_empty_inputs(spark):
     """Same battery for the round-5 operators: no loops, raises, or
     null rows on empty inputs."""
-    from kgforge.graphstats import pagerank, subject_out_degrees
+    from kgforge.graphstats import pagerank, pagerank_weighted, subject_out_degrees
     from kgforge.incremental import dictionary_link_triples
     from kgforge.textops import stratified_sample
 
     empty_tri = spark.createDataFrame([], "h long, t long, r long")
     assert pagerank(empty_tri, n_iter=3).count() == 0
+    assert pagerank_weighted(empty_tri, n_iter=3).count() == 0
     empty_spo = spark.createDataFrame([], "s long, p long, o long")
     assert subject_out_degrees(empty_spo).count() == 0
 
